@@ -59,13 +59,11 @@ object AqlPipeline {
                            checkpointDir: String,
                            table: String): DataStreamWriter[Row] = {
     val src = Filters.withTags(events)
-    if (Aql.parse(aql).select.isEmpty) {
-      val selected = src.filter(Aql.predicate(aql)).drop("tags")
-      DerbySink.attach(selected, url, checkpointDir)
-    } else {
+    if (Aql.parse(aql).select.isEmpty)
+      DerbySink.attach(src.filter(Aql.predicate(aql)), url, checkpointDir)
+    else
       DerbySink.attachAs(Aql.sinkProjection(src, aql), url, table,
         "event_id", checkpointDir)
-    }
   }
 
   /** Per-tag table ROUTING (SURVEY §2.1 q04's streaming half): the
@@ -80,11 +78,7 @@ object AqlPipeline {
   def attachRouted(spark: SparkSession, stagingDir: String, url: String,
                    checkpointDir: String,
                    prefix: String = "route_"): DataStreamWriter[Row] = {
-    // EventStream.read already carries the µs convention columns
-    val flat = EventStream.read(spark, stagingDir)
-      .select(col("event_id"), col("ts_us"), col("user_id"),
-        col("event_type"), col("value"))
-    flat.writeStream
+    DerbySink.envelope(EventStream.read(spark, stagingDir)).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -25,25 +25,24 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * the Spark checkpoint only avoids re-reading files.
   *
   * The OffsetMap is one row per stream — metadata-scale relative to the
-  * events, but NOT driver-bounded by contract: a batch may touch
-  * millions of streams. So the map never fully materializes on the
-  * driver inside the landing protocol: the lowerBound side is a JDBC
-  * scan joined distributively, and the advance drains the per-stream
-  * maxima through toLocalIterator one shuffle partition at a time.
-  * ([[readOffsets]] does collect the map — it is the restart-inspection
-  * API, for tests and operators, not part of the per-batch path.)
+  * events, but not bounded by contract: a batch may touch millions of
+  * streams. So the landing protocol never materializes it on the driver:
+  * the lowerBound side is a JDBC scan joined distributively, and the
+  * per-stream maxima are MERGEd into `OFFSETS` by executors through
+  * [[DerbySink.upsertBatchAs]] — the same chunked, retried, write-locked
+  * writer as the rows. ([[readOffsets]] does collect the map — it is the
+  * restart-inspection API, for tests and operators, not part of the
+  * per-batch path.)
   *
-  * DEVIATION from EP-3: the reference advances its OffsetMap in the SAME
-  * database transaction as the landed rows. Spark executors each hold
-  * their own JDBC connection, so a single cross-connection transaction
-  * is not expressible here; instead rows MERGE per-partition first and
-  * the OffsetMap advances afterwards in a separate driver-side
-  * transaction. The ordering (rows, then stats, then offsets) plus the
-  * idempotent keyed MERGE preserves effectively-exactly-once: a crash
-  * between any two steps re-delivers the batch, replayed rows no-op,
-  * the stat MERGE keeps the larger count, and the offsets advance is
-  * last so a fresh count is never computed against a watermark the rows
-  * haven't reached.
+  * Rows, the fresh-count stat and the offsets are three separate
+  * commits, in that order, not one transaction (executors each hold
+  * their own JDBC connection). Every crash point is still recoverable,
+  * because each step is idempotent: a crash re-delivers the batch,
+  * replayed rows MERGE as no-ops, the stat MERGE keeps the larger count,
+  * and the offsets advance is last, so a fresh count is never computed
+  * against a watermark the rows haven't reached. A crash mid-advance
+  * leaves some streams advanced; the replay counts only the others' rows
+  * as fresh, and offsets are monotonic maxima.
   */
 object DbResume {
 
@@ -51,19 +50,10 @@ object DbResume {
   val OFFSETS = "graft_offsets"
   val STATS = "graft_batch_stats"
 
-  private[streaming] def ensureAux(url: String): Unit = {
-    val c = DerbySink.connect(url)
-    try {
-      val st = c.createStatement()
-      def create(sql: String): Unit =
-        try st.executeUpdate(sql)
-        catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
-      try {
-        create(s"CREATE TABLE $OFFSETS (stream_id BIGINT PRIMARY KEY, last_off BIGINT)")
-        create(s"CREATE TABLE $STATS (batch_key VARCHAR(255) PRIMARY KEY, n_written BIGINT)")
-      } finally st.close()
-    } finally c.close()
-  }
+  private[streaming] def ensureAux(url: String): Unit =
+    DerbySink.createIfAbsent(url,
+      s"CREATE TABLE $OFFSETS (stream_id BIGINT PRIMARY KEY, last_off BIGINT)",
+      s"CREATE TABLE $STATS (batch_key VARCHAR(255) PRIMARY KEY, n_written BIGINT)")
 
   /** The OffsetMap as stored in the DB. */
   def readOffsets(url: String): Map[Long, Long] = {
@@ -74,49 +64,6 @@ object DbResume {
       val b = Map.newBuilder[Long, Long]
       while (rs.next()) b += rs.getLong(1) -> rs.getLong(2)
       b.result()
-    } finally c.close()
-  }
-
-  /** JDBC rows merged+committed per chunk while advancing the OffsetMap.
-    * Committing PER CHUNK (not once at the end) is a liveness
-    * requirement, not a tuning knob: `maxes` is a toLocalIterator, so
-    * pulling it runs Spark jobs — and a recomputed `fresh` partition
-    * (cached block lost) re-runs the lazy JDBC scan of OFFSETS, which
-    * would wait on rows an in-flight MERGE has X-locked while the driver
-    * waits on that very job: a guaranteed Derby lock-wait timeout. The
-    * advance therefore alternates strictly: drain a chunk from the
-    * iterator with NO open statement work, then merge+commit it before
-    * the next pull — the lock window never overlaps a job. A crash
-    * mid-advance leaves some streams advanced and some not; replays
-    * re-deliver only the un-advanced streams' rows and the keyed sink
-    * MERGE absorbs them (offsets are monotonic maxes).
-    */
-  private val AdvanceChunk = 10000
-
-  private def advanceOffsets(url: String, maxes: Iterator[(Long, Long)]): Unit = {
-    if (!maxes.hasNext) return
-    val c = DerbySink.connect(url)
-    try {
-      c.setAutoCommit(false)
-      val ps = c.prepareStatement(
-        s"""MERGE INTO $OFFSETS t USING SYSIBM.SYSDUMMY1
-           |ON t.stream_id = ?
-           |WHEN MATCHED THEN UPDATE SET last_off = ?
-           |WHEN NOT MATCHED THEN INSERT (stream_id, last_off) VALUES (?, ?)""".stripMargin)
-      try {
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long)](AdvanceChunk)
-        while (maxes.hasNext) {
-          buf.clear()
-          while (maxes.hasNext && buf.size < AdvanceChunk) buf += maxes.next()
-          buf.foreach { case (sid, off) =>
-            ps.setLong(1, sid); ps.setLong(2, off)
-            ps.setLong(3, sid); ps.setLong(4, off)
-            ps.addBatch()
-          }
-          ps.executeBatch()
-          c.commit()
-        }
-      } finally ps.close()
     } finally c.close()
   }
 
@@ -160,9 +107,7 @@ object DbResume {
   def attach(spark: SparkSession, stagingDir: String, url: String,
              checkpointDir: String, runId: String): DataStreamWriter[Row] = {
     ensureAux(url)
-    val flat = EventStream.read(spark, stagingDir)
-      .select(col("event_id"), col("ts_us"), col("user_id"),
-        col("event_type"), col("value"))
+    val flat = DerbySink.envelope(EventStream.read(spark, stagingDir))
     DerbySink.ensureTableFor(url, SINK, flat.schema, "event_id")
     val statPrefix = runId.take(200)
     flat.writeStream
@@ -176,6 +121,12 @@ object DbResume {
   /** One batch's landing protocol: rows MERGE, then the fresh-count stat,
     * then the OffsetMap advance — see the class scaladoc for why this
     * order makes every crash point recoverable.
+    *
+    * Liveness: the advance's JDBC scan of `OFFSETS` (inside `fresh`) runs
+    * below the per-stream aggregate's exchange, and its `OFFSETS` writes
+    * run above it. So no task writing `OFFSETS` runs while that scan can
+    * (re-)run, and a writer never waits on a reader of the table it holds
+    * locks in.
     */
   private[streaming] def landBatch(batch: DataFrame, url: String,
                                    statKey: String): Unit = {
@@ -205,24 +156,12 @@ object DbResume {
         // leaves the watermark un-advanced, so the replay recomputes the
         // SAME fresh count; a crash after it has the count safe already
         recordStat(url, statKey, n)
-        if (n > 0) {
-          // advance the map only AFTER the rows landed: a crash
-          // between the two re-delivers (at-least-once) and the keyed
-          // MERGE absorbs it. toLocalIterator streams ONE shuffle
-          // partition of (stream, max) rows to the driver at a time —
-          // the driver-memory bound is streams-per-partition, never the
-          // batch's full stream cardinality (the chunked JDBC MERGE
-          // drains it incrementally).
-          val maxes = fresh.groupBy("user_id").agg(max("event_id").as("m"))
-            .toLocalIterator()
-          advanceOffsets(url,
-            new Iterator[(Long, Long)] {
-              def hasNext: Boolean = maxes.hasNext
-              def next(): (Long, Long) = {
-                val r = maxes.next(); (r.getLong(0), r.getLong(1))
-              }
-            })
-        }
+        // advance the map only AFTER the rows landed and were counted
+        if (n > 0)
+          DerbySink.upsertBatchAs(
+            fresh.groupBy(col("user_id").as("stream_id"))
+              .agg(max("event_id").as("last_off")),
+            url, OFFSETS, "stream_id")
       } finally fresh.unpersist()
     } finally batch.unpersist()
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.ExpressionSet
 
 /** S7/S8 — the "to-db" half (SURVEY.md §2.1, §2.11): a `foreachBatch`
   * JDBC sink that MERGEs each micro-batch into an embedded Derby table
@@ -27,11 +28,6 @@ import org.apache.spark.sql.Row
 object DerbySink {
 
   val TABLE = "events_sink"
-
-  /** Columns landed in the DB (envelope flattened to the µs convention —
-    * the reference's event→row ETL mapping).
-    */
-  private val COLS = Seq("event_id", "ts_us", "user_id", "event_type", "value")
 
   def connect(url: String): Connection = DriverManager.getConnection(url)
 
@@ -55,94 +51,73 @@ object DerbySink {
     if (url.startsWith("jdbc:derby://")) body
     else embeddedWriteLocks.computeIfAbsent(url, _ => new Object).synchronized(body)
 
-  /** CREATE TABLE if absent (Derby has no IF NOT EXISTS; X0Y32 = exists). */
-  def ensureTable(url: String): Unit = {
-    val c = connect(url)
-    try {
-      val st = c.createStatement()
-      try st.executeUpdate(
-        s"""CREATE TABLE $TABLE (
-           |  event_id BIGINT PRIMARY KEY,
-           |  ts_us BIGINT,
-           |  user_id BIGINT,
-           |  event_type VARCHAR(64),
-           |  value DOUBLE)""".stripMargin)
-      catch { case e: SQLException if e.getSQLState == "X0Y32" => () }
-      finally st.close()
-    } finally c.close()
-  }
-
-  /** Upserts one micro-batch of the fixed envelope schema — the special
-    * case of [[upsertBatchAs]] (which derives the identical keyed MERGE
-    * from this projection's schema, and carries the chunked retry).
+  /** The landed row of an event — the reference's event→row mapping:
+    * the envelope flattened to the µs convention. `events_sink`,
+    * [[DbResume]]'s sink and the routed tables all land this projection,
+    * so their DDL is all derived from its schema by [[ensureTableFor]].
     */
+  private[streaming] def envelope(events: DataFrame): DataFrame =
+    events.select(col("event_id"), expr("ts div 1000").as("ts_us"),
+      col("user_id"), col("event_type"), col("value"))
+
+  /** Upserts one micro-batch of events into `events_sink` as envelope rows. */
   def upsertBatch(batch: DataFrame, url: String): Unit =
-    upsertBatchAs(batch
-      .select(col("event_id"), expr("ts div 1000").as("ts_us"),
-        col("user_id"), col("event_type"), col("value")),
-      url, TABLE, "event_id")
+    upsertBatchAs(envelope(batch), url, TABLE, "event_id")
 
   /** Wires a staged event stream into the sink with a checkpoint — the
     * whole events-to-db pipeline (S1 source → S7 sink, resumable per S8).
     */
-  def attach(events: DataFrame, url: String, checkpointDir: String): DataStreamWriter[Row] = {
-    ensureTable(url)
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) => upsertBatch(batch, url) }
-  }
+  def attach(events: DataFrame, url: String, checkpointDir: String): DataStreamWriter[Row] =
+    attachAs(envelope(events), url, TABLE, "event_id", checkpointDir)
 
   // ------------- schema-derived sink (arbitrary SELECT projections) ------
 
-  /** The reference lands EXTRACTED payload fields as DB columns, not just
-    * the envelope — so the sink must accept an arbitrary projection. The
-    * generic path derives the DDL and the keyed MERGE from the
-    * DataFrame's own schema.
+  /** Spark column type → (Derby DDL type, JDBC bind type): the one
+    * mapping the DDL and the MERGE binds both read. The reference lands
+    * EXTRACTED payload fields as DB columns, not just the envelope, so
+    * every sink table is derived from its DataFrame's own schema.
     */
-  private def sqlType(dt: DataType): String = dt match {
-    case LongType => "BIGINT"
-    case IntegerType => "INT"
-    case DoubleType => "DOUBLE"
-    case FloatType => "REAL"
-    case BooleanType => "BOOLEAN"
-    case StringType => "VARCHAR(1024)"
-    case TimestampType => "TIMESTAMP"
+  private def columnType(dt: DataType): (String, Int) = dt match {
+    case LongType => ("BIGINT", Types.BIGINT)
+    case IntegerType => ("INT", Types.INTEGER)
+    case DoubleType => ("DOUBLE", Types.DOUBLE)
+    case FloatType => ("REAL", Types.REAL)
+    case BooleanType => ("BOOLEAN", Types.BOOLEAN)
+    case StringType => ("VARCHAR(1024)", Types.VARCHAR)
+    case TimestampType => ("TIMESTAMP", Types.TIMESTAMP)
     case other =>
       throw new IllegalArgumentException(s"unsupported sink column type $other")
   }
 
-  private def jdbcType(dt: DataType): Int = dt match {
-    case LongType => Types.BIGINT
-    case IntegerType => Types.INTEGER
-    case DoubleType => Types.DOUBLE
-    case FloatType => Types.REAL
-    case BooleanType => Types.BOOLEAN
-    case StringType => Types.VARCHAR
-    case TimestampType => Types.TIMESTAMP
-    case other =>
-      throw new IllegalArgumentException(s"unsupported sink column type $other")
+  /** Runs each CREATE TABLE, skipping tables that already exist (Derby
+    * has no IF NOT EXISTS; SQLSTATE X0Y32 = exists).
+    */
+  private[streaming] def createIfAbsent(url: String, ddl: String*): Unit = {
+    val c = connect(url)
+    try {
+      val st = c.createStatement()
+      try ddl.foreach { sql =>
+        try st.executeUpdate(sql)
+        catch { case e: SQLException if e.getSQLState == "X0Y32" => () }
+      } finally st.close()
+    } finally c.close()
   }
 
-  /** CREATE TABLE matching `schema`, PRIMARY KEY on `key` (X0Y32 = exists). */
+  /** CREATE TABLE matching `schema` if absent, PRIMARY KEY on `key`. */
   def ensureTableFor(url: String, table: String, schema: StructType, key: String): Unit = {
     require(schema.fieldNames.contains(key), s"sink schema must carry key '$key'")
     val cols = schema.fields.map { f =>
       val pk = if (f.name == key) " PRIMARY KEY" else ""
-      s"${f.name} ${sqlType(f.dataType)}$pk"
+      s"${f.name} ${columnType(f.dataType)._1}$pk"
     }.mkString(", ")
-    val c = connect(url)
-    try {
-      val st = c.createStatement()
-      try st.executeUpdate(s"CREATE TABLE $table ($cols)")
-      catch { case e: SQLException if e.getSQLState == "X0Y32" => () }
-      finally st.close()
-    } finally c.close()
+    createIfAbsent(url, s"CREATE TABLE $table ($cols)")
   }
 
   /** Schema-derived idempotent MERGE of one micro-batch into `table`,
-    * keyed on `key`. Same shape as [[upsertBatch]] — per-partition
-    * batched JDBC, in-batch dedup by key first.
+    * keyed on `key` — the one JDBC write path of every sink table and of
+    * [[DbResume]]'s OffsetMap: in-batch dedup by key unless the batch is
+    * already unique on it, then per-partition batched MERGE in committed,
+    * retried chunks under the write lock.
     */
   def upsertBatchAs(batch: DataFrame, url: String, table: String, key: String): Unit = {
     val schema = batch.schema
@@ -159,9 +134,17 @@ object DerbySink {
          |$updates
          |WHEN NOT MATCHED THEN INSERT (${names.mkString(", ")})
          |  VALUES (${names.map(_ => "?").mkString(", ")})""".stripMargin
-    val types = schema.fields.map(f => jdbcType(f.dataType))
+    val types = schema.fields.map(f => columnType(f.dataType)._2)
     val otherIdx = others.map(names.indexOf).toArray // once, not per row
-    val rows = batch.dropDuplicates(key)
+    // in-batch dedup by key, skipped when the plan already proves the key
+    // unique (an aggregate grouped by it, like DbResume's OffsetMap
+    // advance): a redundant dedup is one more hash aggregate whose memory
+    // the task holds for as long as it writes
+    val plan = batch.queryExecution.analyzed
+    val keyAttr = ExpressionSet(plan.output.filter(_.name == key))
+    val rows =
+      if (plan.distinctKeys.exists(ks => ks.nonEmpty && ks.subsetOf(keyAttr))) batch
+      else batch.dropDuplicates(key)
     rows.foreachPartition { it: Iterator[Row] =>
       if (it.hasNext) withWriteLock(url) {
         var c = connect(url)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase._
@@ -14,12 +13,7 @@ import graft.operators.Filters
   * one batch pass — and a replay of the whole stream must leave it
   * unchanged (at-least-once → effectively-exactly-once).
   */
-class AqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  override def beforeAll(): Unit = {
-    System.setProperty("derby.system.home", tmpDir("graft-aqlpipe-home"))
-    super.beforeAll()
-  }
+class AqlPipelineSpec extends AnyFunSuite {
 
   private val AQL = "FROM 'purchase' | 'signup' FILTER _.value > 50"
 
@@ -205,6 +199,36 @@ class AqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(landed == want,
       s"JSON-fed landing ${landed.size} rows, batch AQL says ${want.size}")
     assert(!landed.contains(999999L), "the corrupt line leaked into the sink")
+  }
+
+  test("a no-SELECT subscription lands an 80-character event_type in events_sink") {
+    // events_sink's DDL is derived from the landed envelope's schema like
+    // every other sink table's, so its strings are VARCHAR(1024) too
+    val url = s"jdbc:derby:${tmpDir("graft-aqlwidetag")}/db;create=true"
+    val staging = tmpDir("graft-aqlwidetag-stage")
+    val tag = "t" * 80
+    val sparkS = spark
+    import sparkS.implicits._
+    Seq((7L, 1000L, 3L, tag, 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("append").parquet(staging)
+
+    val q = AqlPipeline.attach(spark, staging, "FROM allEvents", url,
+      tmpDir("graft-aqlwidetag-ckpt")).start()
+    try q.processAllAvailable() finally q.stop()
+
+    val c = DerbySink.connect(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        s"SELECT event_id, event_type FROM ${DerbySink.TABLE}")
+      assert(rs.next(), "the event did not land")
+      assert(rs.getLong(1) == 7L && rs.getString(2) == tag)
+      assert(!rs.next())
+      val cols = c.getMetaData.getColumns(null, null,
+        DerbySink.TABLE.toUpperCase, "EVENT_TYPE")
+      assert(cols.next())
+      assert(cols.getInt("COLUMN_SIZE") == 1024)
+    } finally c.close()
   }
 
   test("AGGREGATE is rejected on the sink path; predicate() also rejects SELECT") {

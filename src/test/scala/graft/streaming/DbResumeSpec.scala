@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase._
@@ -14,12 +13,7 @@ import graft.SparkTestBase._
   * event below its stream's watermark must still be INSERTed — the
   * watermark classifies, the keyed MERGE decides.
   */
-class DbResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  override def beforeAll(): Unit = {
-    System.setProperty("derby.system.home", tmpDir("graft-dbresume-home"))
-    super.beforeAll()
-  }
+class DbResumeSpec extends AnyFunSuite {
 
   test("OffsetMap lives in the DB; a fresh-checkpoint replay writes nothing") {
     val url = s"jdbc:derby:${tmpDir("graft-dbresume")}/db;create=true"
@@ -80,10 +74,10 @@ class DbResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the landing protocol stays driver-bounded at an adversarial stream count") {
     // every row its OWN stream: the OffsetMap grows to the full batch
-    // cardinality, exercising (a) the JDBC-scan lowerBound join instead
-    // of a driver collect+broadcast, (b) toLocalIterator draining the
-    // per-stream maxima partition-by-partition, and (c) multiple
-    // AdvanceChunk flushes inside one committed advance
+    // cardinality, so (a) the lowerBound side must be the distributed
+    // JDBC-scan join, not a driver collect+broadcast, and (b) the advance
+    // MERGEs 30k per-stream maxima from executors in many committed
+    // chunks — nothing on the driver scales with the stream count
     val url = s"jdbc:derby:${tmpDir("graft-dbresume-wide")}/db;create=true"
     val n = 30000L
     val wide = spark.range(n).select(
@@ -136,5 +130,46 @@ class DbResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     DbResume.landBatch(batch2, url, "crash-1")
     assert(DbResume.rowsWritten(url) == total,
       "post-advance replay overwrote the recorded count with zero")
+  }
+
+  test("a batch replayed after a crash part-way through the OffsetMap advance lands completely") {
+    val url = s"jdbc:derby:${tmpDir("graft-dbresume-partial")}/db;create=true"
+    val events = DerbySink.envelope(graft.sources.Tables.events(spark, sf0001))
+    val total = events.count()
+    val mid = events.agg(expr("percentile_approx(event_id, 0.5)")).head().getLong(0)
+    val batch1 = events.filter(col("event_id") <= mid)
+    val batch2 = events.filter(col("event_id") > mid)
+    val n2 = batch2.count()
+
+    DbResume.ensureAux(url)
+    DerbySink.ensureTableFor(url, DbResume.SINK, events.schema, "event_id")
+    DbResume.landBatch(batch1, url, "partial-0")
+
+    // crash part-way through batch 2's advance: its rows and its stat
+    // landed (every batch-2 id is above batch 1's, so all n2 are fresh),
+    // but only the even streams' maxima reached OFFSETS
+    DerbySink.upsertBatchAs(batch2, url, DbResume.SINK, "event_id")
+    DbResume.recordStat(url, "partial-1", n2)
+    val maxima2 = batch2.groupBy(col("user_id").as("stream_id"))
+      .agg(max("event_id").as("last_off"))
+    val advanced = maxima2.filter(col("stream_id") % 2 === 0)
+    assert(advanced.count() > 0 && advanced.count() < maxima2.count(),
+      "the crash must leave some streams advanced and some not")
+    DerbySink.upsertBatchAs(advanced, url, DbResume.OFFSETS, "stream_id")
+
+    // the re-delivered batch finishes the advance; the max-keeping stat
+    // MERGE keeps the pre-crash count over the replay's smaller one
+    DbResume.landBatch(batch2, url, "partial-1")
+    assert(DbResume.rowsWritten(url) == total)
+    val wantOffsets = events.groupBy("user_id").agg(max("event_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(DbResume.readOffsets(url) == wantOffsets)
+    val c = DerbySink.connect(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        s"SELECT COUNT(*), COUNT(DISTINCT event_id) FROM ${DbResume.SINK}")
+      rs.next()
+      assert(rs.getLong(1) == total && rs.getLong(2) == total)
+    } finally c.close()
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase._
@@ -12,13 +11,7 @@ import graft.SparkTestBase._
   * OffsetMap-in-the-same-transaction contract, re-expressed as
   * checkpoint + idempotent upsert.
   */
-class DerbySinkSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  override def beforeAll(): Unit = {
-    // keep derby.log out of the repo working dir
-    System.setProperty("derby.system.home", tmpDir("graft-derby-home"))
-    super.beforeAll()
-  }
+class DerbySinkSpec extends AnyFunSuite {
 
   private def derbyUrl(): String =
     s"jdbc:derby:${tmpDir("graft-derby")}/db;create=true"
@@ -35,8 +28,9 @@ class DerbySinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("S7: batch upsert is idempotent — replay leaves the table unchanged") {
     val url = derbyUrl()
-    DerbySink.ensureTable(url)
     val events = graft.sources.Tables.events(spark, sf0001)
+    DerbySink.ensureTableFor(url, DerbySink.TABLE,
+      DerbySink.envelope(events).schema, "event_id")
     DerbySink.upsertBatch(events, url)
     val first = tableState(url)
     DerbySink.upsertBatch(events, url) // at-least-once redelivery
